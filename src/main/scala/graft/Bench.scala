@@ -37,14 +37,7 @@ import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val w0 = System.nanoTime()
     warmup(spark, sfDir)
@@ -59,16 +52,9 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // the recorded bench times EVERY registry query (the driver contract:
-    // entries in `queries` are never removed). The brute-exact baselines
-    // (SparkEntry.benchDemoted) can be skipped for LOCAL iteration only,
-    // via the explicit opt-in SPARK_GRAFT_BENCH_SKIP_DEMOTED=1 — the
-    // round-16 default-skip was reverted because BENCH_r15 carried all
-    // three and a per-round map that loses entries reads as a regression
-    val includeAll = only.isDefined ||
-      !sys.env.get("SPARK_GRAFT_BENCH_SKIP_DEMOTED").contains("1")
+    // entries in `queries` are never removed)
     val names = SparkEntry.queries.keys.toSeq
       .filter(n => only.forall(_.contains(n)))
-      .filterNot(n => SparkEntry.benchDemoted(n) && !includeAll)
     val runsByQuery = scala.collection.mutable.Map
       .empty[String, Vector[(Double, Boolean)]].withDefaultValue(Vector.empty)
     // host-load samples bracketing every rep round: a driver-vs-builder

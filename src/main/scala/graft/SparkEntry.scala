@@ -54,9 +54,8 @@ object SparkEntry {
     * persisted-index). The recorded bench TIMES them like every other
     * registry query (the driver contract: bench entries are never
     * removed — the round-16 default-skip was reverted in the
-    * optimization round); this set only names them so local iteration
-    * can skip them via SPARK_GRAFT_BENCH_SKIP_DEMOTED=1 and so docs /
-    * tools can refer to the block by one definition. */
+    * optimization round); this set only names them so the bench's
+    * `demoted` field and docs can refer to the block by one definition. */
   val benchDemoted: Set[String] =
     Set("q44_cosine_neardup", "q78_doc_cosine", "q126_margin_mine")
 

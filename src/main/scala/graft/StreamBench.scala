@@ -16,6 +16,9 @@ import org.apache.spark.sql.streaming.Trigger
   * verified in AvroSpec) and staged as parquet files, then consumed via
   * the file wire source — same decode + sink plan a Kafka source feeds,
   * no brokers needed (this image ships no Kafka jars).
+  *
+  * `Bench` reports it as `stream_rows_per_sec`; the steady-state ingest
+  * benchmark is `perfbench/run.py --workload ingest_backlog`.
   */
 object StreamBench {
 
@@ -65,20 +68,5 @@ object StreamBench {
     val rows = spark.read.parquet(s"$outDir/$topic").count()
     require(rows == n, s"pipeline wrote $rows of $n rows")
     (rows, sec)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val n = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "1000000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val (rows, sec) = measure(spark, n)
-    println(s"""{"metric":"stream_rows_per_sec","value":${rows / sec},"unit":"rows/sec","rows":$rows,"sec":$sec}""")
-    spark.stop()
   }
 }

@@ -73,25 +73,56 @@ object Verify {
       broken
   }
 
+  /** Dump each query's result to `$outDir/<name>` under a per-query
+    * timeout and its own job group, and return the names of the queries
+    * that threw or timed out (sorted). Exposed for PreflightSpec.
+    *
+    * One worker thread per query lifetime: after a timeout the cancelled
+    * task may keep the thread busy in a non-interruptible phase, so the
+    * pool is rebuilt — the next query always starts on a fresh thread and
+    * its timeout clock isn't charged for queue wait behind a stuck one. */
+  private[graft] def dump(
+      spark: SparkSession, sfDir: String, outDir: String,
+      queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
+      timeoutSec: Long): Seq[String] = {
+    import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
+    var pool = Executors.newSingleThreadExecutor()
+    val failed = queries.toSeq.flatMap { case (name, fn) =>
+      val task = pool.submit(new java.util.concurrent.Callable[Unit] {
+        override def call(): Unit = {
+          spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
+          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          finally spark.sparkContext.clearJobGroup()
+        }
+      })
+      try { task.get(timeoutSec, TimeUnit.SECONDS); None }
+      catch {
+        case _: TimeoutException =>
+          spark.sparkContext.cancelJobGroup(name)
+          task.cancel(true)
+          pool.shutdownNow()
+          pool = Executors.newSingleThreadExecutor()
+          System.err.println(s"[verify] $name failed: timeout after ${timeoutSec}s")
+          Some(name)
+        case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getCause match {
+            case null => e.getMessage
+            case c => c.getMessage
+          }}")
+          Some(name)
+      }
+    }
+    pool.shutdownNow()
+    failed.sorted
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "180").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
 
-    import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
-    // One worker thread per query lifetime: after a timeout the cancelled
-    // task may keep the thread busy in a non-interruptible phase, so the
-    // pool is rebuilt — the next query always starts on a fresh thread and
-    // its timeout clock isn't charged for queue wait behind a stuck one.
-    var pool = Executors.newSingleThreadExecutor()
     // Optional comma-separated query filter for fast local iteration
     // (e.g. SPARK_GRAFT_ONLY=q43_simhash,q45_ann_ivf); driver leaves it
     // unset and gets the full dump.
@@ -113,31 +144,7 @@ object Verify {
       spark.stop()
       sys.exit(2)
     }
-    selected.foreach { case (name, fn) =>
-      val task = pool.submit(new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit = {
-          spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          finally spark.sparkContext.clearJobGroup()
-        }
-      })
-      try task.get(timeoutSec, TimeUnit.SECONDS)
-      catch {
-        case _: TimeoutException =>
-          spark.sparkContext.cancelJobGroup(name)
-          task.cancel(true)
-          pool.shutdownNow()
-          pool = Executors.newSingleThreadExecutor()
-          System.err.println(s"[verify] $name failed: timeout after ${timeoutSec}s")
-        case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getCause match {
-            case null => e.getMessage
-            case c => c.getMessage
-          }}")
-      }
-    }
-    pool.shutdownNow()
+    val failed = dump(spark, sfDir, outDir, selected, timeoutSec)
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -161,5 +168,12 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // a runtime failure is a red run even though everything else was
+    // written: exit 1 (preflight's analysis abort is 2)
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] RED RUN: ${failed.size}/${selected.size} failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

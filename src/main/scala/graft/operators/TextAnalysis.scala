@@ -383,20 +383,11 @@ object TextAnalysis extends QueryPack {
     * qualifies both ways, arriving as two candidate rows), each verified
     * EXACTLY from the two full shingle arrays with its own divisor.
     * Output ≡ the inverted-index [[containmentDfCut]] (ScaleSpec asserts
-    * set equality); the declared oracle is unchanged.
-    *
-    * `fullMaxDf` is the hot-shingle bound on the FULL index side — the
-    * q127/q79 df-cut composed into this direction, ready to tighten at
-    * corpus scales where one boilerplate shingle's posting list
-    * dominates the probe. The declared gate runs UNCAPPED: the r15
-    * CapProbe sweep measured every cap (16–128) value-neutral at sf0.1
-    * AND slower (2.49 s → 4.8–5.3 s — the cap's semi-join costs more
-    * than the candidate volume it trims at this corpus), so the cap is
-    * a 100 TB knob, not a test-scale win; ScaleSpec pins the
-    * value-neutrality so tightening it later is a measured one-liner. */
+    * set equality); the declared oracle is unchanged. The full index
+    * side is uncapped: a df cap there was measured value-neutral at
+    * sf0.1 and slower (PERF_r15.md). */
   private[graft] def prefixContainmentJoin(s: SparkSession, d: String,
-                                           tnum: Int = 9, tden: Int = 10,
-                                           fullMaxDf: Long = -1L): DataFrame = {
+                                           tnum: Int = 9, tden: Int = 10): DataFrame = {
     val sh = Tables.documents(s, d)
       .select(col("doc_id"),
               graft.functions.NativeExprs.word_shingles(col("text")).as("sh"))
@@ -431,22 +422,13 @@ object TextAnalysis extends QueryPack {
       .withColumn("rn", row_number().over(
         Window.partitionBy("doc_id").orderBy(col("df"), col("s"))))
       .select(col("s"), col("doc_id"), col("sz"), col("rn"))
-    // optional df cap on the FULL index side (the q127/q79 df-cut shape
-    // in the containment direction): candidate volume is
-    // Σ df_pref(s)·min(df(s), cap) instead of Σ df_pref(s)·df(s) — a
-    // recall trade in hot shingles only (a pair whose EVERY shared
-    // prefix shingle is hotter than the cap is missed)
-    val rankedFull =
-      if (fullMaxDf > 0)
-        ranked.join(dfTab.filter(col("df") <= fullMaxDf).select("s"), "s")
-      else ranked
     val cand = ranked
       .filter(col("rn") <=
         col("sz") - expr(s"(sz * $tnum + $tden - 1) div $tden") + lit(1))
       .select(col("s"), col("doc_id").as("a_id"),
               col("sz").as("asz"), col("rn").as("arn"))
-      .join(rankedFull.select(col("s"), col("doc_id").as("b_id"),
-                              col("sz").as("bsz"), col("rn").as("brn")),
+      .join(ranked.select(col("s"), col("doc_id").as("b_id"),
+                          col("sz").as("bsz"), col("rn").as("brn")),
             Seq("s"))
       .filter(col("a_id") =!= col("b_id"))
       // PPJoin's positional upper bound COMPOSES into the containment

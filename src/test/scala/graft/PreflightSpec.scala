@@ -38,6 +38,18 @@ class PreflightSpec extends SparkTestBase {
       "only the analysis error fails; the timeout defers to the dump loop")
   }
 
+  test("dump names exactly the query that throws at runtime") {
+    val boom = udf((n: Long) => { if (n >= 0) sys.error("boom"); n })
+    // analyzes clean, so only the dump loop can catch it
+    val throwsAtRuntime: (SparkSession, String) => DataFrame =
+      (s, d) => Tables.events(s, d).select(boom(col("event_id")).as("x"))
+    val out = java.nio.file.Files.createTempDirectory("graft-dump").toString
+    val failed = Verify.dump(spark, sfDir, out,
+      Map("ok" -> good, "throws" -> throwsAtRuntime), timeoutSec = 120L)
+    assert(failed == Seq("throws"))
+    assert(spark.read.parquet(s"$out/ok").count() > 0)
+  }
+
   test("every declared query plan analyzes clean") {
     val out = Verify.preflight(spark, sfDir, SparkEntry.queries)
     assert(out.isEmpty, "plans failing analysis: " +

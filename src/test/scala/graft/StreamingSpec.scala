@@ -910,7 +910,7 @@ class StreamingSpec extends SparkTestBase {
        "mid-run, and out-of-horizon true pairs are absent") {
     // the oracle certifies the emitted set; this pins the MECHANISM —
     // per-batch StateOperatorProgress must report numRowsRemoved > 0
-    // (the StateTtlProbe observation, now a suite invariant). Fresh
+    // (the PERF_r13.md eviction observation, now a suite invariant). Fresh
     // memo so the stream runs under the listener.
     import org.apache.spark.sql.streaming.StreamingQueryListener
     val removed = new java.util.concurrent.atomic.AtomicLong()
@@ -1110,7 +1110,7 @@ class StreamingSpec extends SparkTestBase {
     // bloom + the static side, NOT a streaming state store — a plan
     // change that reintroduces one (e.g. dropDuplicates on the stream)
     // would silently change the gate's 100 TB cost model. Observed via
-    // the same listener StateMetrics uses, but keyed BY RUN ID: the
+    // a StreamingQueryListener keyed BY RUN ID: the
     // old shared-accumulator form raced q177's async progress events
     // against the q104 emptiness assert (ADVICE r13). Attributing
     // state ops to the runId each event carries, and asserting on the
